@@ -20,6 +20,8 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
 
+from .scale import reuse
+
 
 def asof_join(left: DataFrame, right: DataFrame, on: str,
               by: list[str] | str | None = None,
@@ -159,7 +161,7 @@ def hierarchical_rollup(df: DataFrame, ts_col: str, value_col: str,
     # and Spark does not re-use the exchange across union branches — without
     # this the raw table would be scanned len(levels) times.  The cached
     # set is the *aggregated* output (tiny), never the raw input.
-    cur = cur.persist()
+    cur = reuse(cur)
     out = cur.select(*by, F.lit(finest).alias("resolution"), "bucket",
                      "n", F.col("__s").cast("double").alias("total"))
     for lvl in coarser:

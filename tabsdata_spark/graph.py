@@ -14,8 +14,11 @@ pipeline scans.
 
 from __future__ import annotations
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
+
+from .scale import reuse
 
 #: Below this many (directed) edge rows the exact iterative operators run
 #: their recursion in the driver on numpy arrays instead of scheduling
@@ -40,8 +43,8 @@ DRIVER_EDGE_THRESHOLD = 4_000_000
 
 def _edges_to_numpy(df: DataFrame, c1: str, c2: str):
     """Collect a two-column frame into a pair of numpy arrays via Arrow
-    (zero-copy for numeric ids).  Returns None when Arrow/numpy are
-    unavailable so callers fall back to the distributed path."""
+    (zero-copy for numeric ids).  Returns None when the Arrow collect
+    fails so callers fall back to the distributed path."""
     try:
         tbl = df.select(c1, c2).toArrow()
         a = tbl.column(0).to_numpy(zero_copy_only=False)
@@ -51,7 +54,7 @@ def _edges_to_numpy(df: DataFrame, c1: str, c2: str):
         return None
 
 
-def _index_nodes(np, nodes, *cols):
+def _index_nodes(nodes, *cols):
     """Map id arrays onto positions in the sorted unique `nodes` array."""
     return [np.searchsorted(nodes, c) for c in cols]
 
@@ -65,12 +68,8 @@ def _pagerank_driver(e: DataFrame, iterations: int,
     precedent).  Same elementwise IEEE arithmetic; float contribution
     sums accumulate in edge order (np.add.at), which — like the
     distributed partial aggs — is one of the orderings `pagerank`'s
-    round-6 output contract already tolerates.  Returns None when
-    numpy/Arrow are unavailable."""
-    try:
-        import numpy as np
-    except ImportError:
-        return None
+    round-6 output contract already tolerates.  Returns None when the
+    Arrow collect fails."""
     try:
         tbl = e.select("src", "dst", "w").toArrow()
         s = tbl.column(0).to_numpy(zero_copy_only=False)
@@ -79,7 +78,7 @@ def _pagerank_driver(e: DataFrame, iterations: int,
     except Exception:
         return None
     nodes = np.unique(np.concatenate([s, d]))
-    si, di = _index_nodes(np, nodes, s, d)
+    si, di = _index_nodes(nodes, s, d)
     n = len(nodes)
     out_w = np.zeros(n, dtype=np.float64)
     np.add.at(out_w, si, w)
@@ -168,18 +167,14 @@ def _pagerank_exact_driver(und: DataFrame, iters: int,
     are elementwise IEEE doubles quantized to int64 and summed as exact
     integers (partitioning- and order-independent, same as the
     decimal(38,0) sums); the damping update is the same fixed IEEE
-    expression.  Returns None when numpy/Arrow are unavailable."""
-    try:
-        import numpy as np
-    except ImportError:
-        return None
+    expression.  Returns None when the Arrow collect fails."""
     arrs = _edges_to_numpy(und, "u", "v")
     if arrs is None:
         return None
     u, v = arrs
     # und is symmetric, so every node appears on the u side
     nodes = np.unique(u)
-    ui, vi = _index_nodes(np, nodes, u, v)
+    ui, vi = _index_nodes(nodes, u, v)
     deg = np.bincount(ui, minlength=len(nodes)).astype(np.float64)
     n = len(nodes)
     base = (1.0 - damping) / float(n)
@@ -228,15 +223,15 @@ def pagerank_exact(edges: DataFrame, src_col: str, dst_col: str,
     # build), and recomputing the upstream edge derivation per round is
     # the dominant cost on join-derived edge lists.  At cluster scale this
     # would be a checkpoint to parquet instead.
-    und = (edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-           .unionByName(
-               edges.select(F.col(dst_col).alias("u"),
-                            F.col(src_col).alias("v")))
-           .distinct().persist())
+    und = reuse(edges.select(F.col(src_col).alias("u"),
+                             F.col(dst_col).alias("v"))
+                .unionByName(
+                    edges.select(F.col(dst_col).alias("u"),
+                                 F.col(src_col).alias("v")))
+                .distinct())
     n_edges = und.count()
     if n_edges == 0:  # empty graph: no nodes, no ranks (the hits_exact
         # contract), preserving the caller's node dtype in the schema
-        und.unpersist()
         return (edges.select(F.col(src_col).alias("node")).limit(0)
                 .withColumn("pagerank", F.lit(None).cast("double")))
     if n_edges <= driver_threshold:
@@ -245,9 +240,8 @@ def pagerank_exact(edges: DataFrame, src_col: str, dst_col: str,
         # DRIVER_EDGE_THRESHOLD)
         out = _pagerank_exact_driver(und, iters, damping)
         if out is not None:
-            und.unpersist()
             return out
-    deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("deg")).persist()
+    deg = reuse(und.groupBy("u").agg(F.count(F.lit(1)).alias("deg")))
     n = deg.count()
     base = (1.0 - damping) / float(n)
     pr = deg.select(F.col("u").alias("node"), "deg",
@@ -276,13 +270,9 @@ def _hits_exact_driver(e: DataFrame, iters: int):
     modes: picos quantization is elementwise IEEE, contribution and L1
     totals are exact int64 sums (bounded by edges * 1e12 under
     DRIVER_EDGE_THRESHOLD), and each normalization is one IEEE division
-    per node.  Returns None when numpy/Arrow are unavailable or the two
+    per node.  Returns None when the Arrow collect fails or the two
     endpoint dtypes differ (the union output type would need coercion)."""
     if e.schema["u"].dataType != e.schema["v"].dataType:
-        return None
-    try:
-        import numpy as np
-    except ImportError:
         return None
     arrs = _edges_to_numpy(e, "u", "v")
     if arrs is None:
@@ -368,9 +358,9 @@ def hits_exact(edges: DataFrame, src_col: str, dst_col: str,
 
     # hash by u alone: HashPartitioning(u) still satisfies the (u, v)
     # dedup clustering, and leaves e co-partitioned for the hub joins
-    e = (keyed(edges.select(F.col(src_col).alias("u"),
-                            F.col(dst_col).alias("v")), "u")
-         .distinct().persist())
+    e = reuse(keyed(edges.select(F.col(src_col).alias("u"),
+                                 F.col(dst_col).alias("v")), "u")
+              .distinct())
     n_e = e.count()
     if 0 < n_e <= driver_threshold:
         # small graph: half-steps cost scheduled jobs/shuffles, not data
@@ -379,7 +369,6 @@ def hits_exact(edges: DataFrame, src_col: str, dst_col: str,
         # of the distributed modes
         out = _hits_exact_driver(e, iters)
         if out is not None:
-            e.unpersist()
             return out
 
     def quant(c):
@@ -405,14 +394,13 @@ def hits_exact(edges: DataFrame, src_col: str, dst_col: str,
             return scores.select(
                 "node", (quant(F.col(col)).cast("double")
                          / tot.cast("double")).alias(col))
-        scores = scores.persist()
+        scores = reuse(scores)
         tot = scores.agg(F.sum(quant(F.col(col))).alias("__t"))
-        return (scores.crossJoin(F.broadcast(tot))
-                .select(scores["*"],
-                        (quant(F.col(col)).cast("double")
-                         / F.col("__t").cast("double")).alias("__nn"))
-                .drop(col).withColumnRenamed("__nn", col)
-                .persist())
+        return reuse(scores.crossJoin(F.broadcast(tot))
+                     .select(scores["*"],
+                             (quant(F.col(col)).cast("double")
+                              / F.col("__t").cast("double")).alias("__nn"))
+                     .drop(col).withColumnRenamed("__nn", col))
 
     auth = None
     for _ in range(iters):
@@ -442,10 +430,6 @@ def _ppr_exact_driver(und: DataFrame, seeds: DataFrame, seed_col: str,
     are the seed-restricted teleport vector and the left-join/COALESCE(0)
     default, which the dense s-array reproduces).  Returns None to fall
     back to the distributed path, or (n_seeds, DataFrame|None)."""
-    try:
-        import numpy as np
-    except ImportError:
-        return None
     arrs = _edges_to_numpy(und, "u", "v")
     if arrs is None:
         return None
@@ -456,7 +440,7 @@ def _ppr_exact_driver(und: DataFrame, seeds: DataFrame, seed_col: str,
         return None
     u, v = arrs
     nodes = np.unique(u)
-    ui, vi = _index_nodes(np, nodes, u, v)
+    ui, vi = _index_nodes(nodes, u, v)
     is_seed = np.isin(nodes, seed_arr)
     n_s = int(is_seed.sum())
     if n_s == 0:
@@ -501,19 +485,19 @@ def ppr_exact(edges: DataFrame, src_col: str, dst_col: str,
     join + ONE partial-agg shuffle; the degree/seed node table is
     persisted (it re-enters every iteration); |S| is the only driver
     collect."""
-    und = (edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-           .unionByName(
-               edges.select(F.col(dst_col).alias("u"),
-                            F.col(src_col).alias("v")))
-           .distinct().persist())
+    und = reuse(edges.select(F.col(src_col).alias("u"),
+                             F.col(dst_col).alias("v"))
+                .unionByName(
+                    edges.select(F.col(dst_col).alias("u"),
+                                 F.col(src_col).alias("v")))
+                .distinct())
     n_edges = und.count()
     if n_edges <= driver_threshold:
         # small graph: run the identical exact recursion in the driver
-        # (see DRIVER_EDGE_THRESHOLD); falls through when numpy/Arrow
-        # are unavailable
+        # (see DRIVER_EDGE_THRESHOLD); falls through when the Arrow
+        # collect fails
         res = _ppr_exact_driver(und, seeds, seed_col, iters, damping)
         if res is not None:
-            und.unpersist()
             n_s, out = res
             if n_s == 0:  # no seed in the graph: teleport undefined —
                 # empty result, caller's node dtype preserved
@@ -521,10 +505,9 @@ def ppr_exact(edges: DataFrame, src_col: str, dst_col: str,
                         .withColumn("ppr", F.lit(None).cast("double")))
             return out
     sd = seeds.select(F.col(seed_col).alias("u")).distinct()
-    deg = (und.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-           .join(sd.withColumn("__seed", F.lit(True)), "u", "left")
-           .withColumn("__seed", F.coalesce("__seed", F.lit(False)))
-           .persist())
+    deg = reuse(und.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
+                .join(sd.withColumn("__seed", F.lit(True)), "u", "left")
+                .withColumn("__seed", F.coalesce("__seed", F.lit(False))))
     n_s = deg.filter(F.col("__seed")).count()
     if n_s == 0:  # no seed appears in the graph: teleport distribution
         # is undefined, so no node carries mass — empty result with the
@@ -574,9 +557,9 @@ def degree_assortativity(edges: DataFrame, src_col: str,
     # e is consumed three times (both degree tables + the join probe) and
     # AQE stage reuse does not fire across the branches when the edge list
     # is join-derived — lazy within-invocation persist computes it once
-    # (the bigram_lm_score lesson; blocks reclaimed by the ContextCleaner)
-    e = edges.select(F.col(src_col).alias("__s"),
-                     F.col(dst_col).alias("__d")).persist()
+    # (the bigram_lm_score lesson)
+    e = reuse(edges.select(F.col(src_col).alias("__s"),
+                           F.col(dst_col).alias("__d")))
     ds = e.groupBy("__s").agg(F.count(F.lit(1)).alias("__ks"))
     dd = e.groupBy("__d").agg(F.count(F.lit(1)).alias("__kd"))
     j = e.join(ds, "__s").join(dd, "__d")
@@ -599,22 +582,19 @@ def degree_assortativity(edges: DataFrame, src_col: str,
         .alias("assortativity"))
 
 
-def _kcore_peel_driver(und: DataFrame, schema, k: int, rounds: int):
+def _kcore_peel_driver(und: DataFrame, k: int, rounds: int):
     """Vectorized driver-side peel over a collected edge array — the same
-    exact integer recursion as the row-at-a-time fallback below (degrees
-    are bincounts; a round keeps edges whose BOTH endpoints had degree
-    >= k), just on numpy masks.  Returns None when numpy/Arrow are
-    unavailable."""
-    try:
-        import numpy as np
-    except ImportError:
-        return None
+    exact integer recursion as the distributed rounds (degrees are
+    bincounts; a round keeps edges whose BOTH endpoints had degree >= k),
+    just on numpy masks.  Returns None when the Arrow collect fails."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
     arrs = _edges_to_numpy(und, "a", "b")
     if arrs is None:
         return None
     a, b = arrs
     nodes = np.unique(a)  # symmetric: every node appears on the a side
-    ai, bi = _index_nodes(np, nodes, a, b)
+    ai, bi = _index_nodes(nodes, a, b)
     alive = np.ones(len(ai), dtype=bool)
     for _ in range(rounds):
         deg = np.bincount(ai[alive], minlength=len(nodes))
@@ -624,6 +604,10 @@ def _kcore_peel_driver(und: DataFrame, schema, k: int, rounds: int):
     mask = deg > 0
     rows = list(zip(nodes[mask].tolist(),
                     [int(d) for d in deg[mask]]))
+    schema = StructType([
+        StructField("node", und.schema["a"].dataType),
+        StructField("degree", LongType()),
+    ])
     return und.sparkSession.createDataFrame(rows, schema)
 
 
@@ -646,45 +630,19 @@ def kcore_peel(edges: DataFrame, src_col: str, dst_col: str,
     distinct-union lineage (the pagerank_exact lesson).  Below
     `driver_threshold` directed edges the peel runs in the driver
     (the connected-components small-graph precedent) — iterative
-    rounds cost JOBS, not data, on small graphs, and the Python peel
+    rounds cost JOBS, not data, on small graphs, and the numpy peel
     is the identical exact integer recursion."""
-    und = (edges.select(F.col(src_col).alias("a"),
-                        F.col(dst_col).alias("b"))
-           .unionAll(edges.select(F.col(dst_col).alias("a"),
-                                  F.col(src_col).alias("b")))
-           .distinct())
-    und = und.persist()
+    und = reuse(edges.select(F.col(src_col).alias("a"),
+                             F.col(dst_col).alias("b"))
+                .unionAll(edges.select(F.col(dst_col).alias("a"),
+                                       F.col(src_col).alias("b")))
+                .distinct())
     n_edges = und.count()
     if n_edges <= driver_threshold:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        schema = StructType([
-            StructField("node", und.schema["a"].dataType),
-            StructField("degree", LongType()),
-        ])
-        out = _kcore_peel_driver(und, schema, k, rounds)
+        out = _kcore_peel_driver(und, k, rounds)
         if out is not None:
-            und.unpersist()
             return out
-        # numpy/Arrow unavailable: the original pure-python peel (same
-        # exact integer recursion, row-at-a-time)
-        pairs = [(r[0], r[1]) for r in und.collect()]
-        und.unpersist()
-        cur_edges = pairs
-        for _ in range(rounds):
-            deg: dict = {}
-            for a, _b in cur_edges:
-                deg[a] = deg.get(a, 0) + 1
-            keep = {n for n, d in deg.items() if d >= k}
-            cur_edges = [(a, b) for a, b in cur_edges
-                         if a in keep and b in keep]
-        final: dict = {}
-        for a, _b in cur_edges:
-            final[a] = final.get(a, 0) + 1
-        return edges.sparkSession.createDataFrame(
-            sorted(final.items()), schema)
     cur = und
-    prev = None
     for _ in range(rounds):
         deg = cur.groupBy("a").agg(F.count(F.lit(1)).alias("__d"))
         keep = deg.filter(F.col("__d") >= k).select("a")
@@ -694,11 +652,8 @@ def kcore_peel(edges: DataFrame, src_col: str, dst_col: str,
         # otherwise REPLAY this round's joins twice per reference —
         # 2^rounds lineage blowup (the pagerank_exact/hits lesson);
         # persist truncates the replay, count() materializes now
-        cur = cur.persist()
+        cur = reuse(cur)
         cur.count()
-        if prev is not None:
-            prev.unpersist()
-        prev = cur
     out = (cur.groupBy("a").agg(F.count(F.lit(1)).alias("degree"))
            .select(F.col("a").alias("node"),
                    F.col("degree").cast("bigint").alias("degree")))

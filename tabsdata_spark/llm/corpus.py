@@ -459,7 +459,7 @@ def bigram_lm_score(docs: DataFrame, id_col: str = "doc_id",
     the strategy is left to AQE exactly as in `tf_idf`.  V (the
     conditioning-vocabulary size) is a genuine 1-row broadcast."""
     from tabsdata_spark.llm.textual import word_ngrams
-    from tabsdata_spark.scale import fan_out
+    from tabsdata_spark.scale import fan_out, reuse
 
     toks = clean_tokens(F.col(text_col))
     grams = F.when(F.size(toks) >= 2, word_ngrams(toks, 2)) \
@@ -481,11 +481,10 @@ def bigram_lm_score(docs: DataFrame, id_col: str = "doc_id",
     # branches — measured 3x the doc_bi cost at sf0.1, and persisting cut
     # the query 2.57s -> 1.72-1.97s interleaved with identical values).
     # Lazy within-invocation persist: materialized inside the caller's
-    # first action, reclaimed by the ContextCleaner once the returned
-    # frame is dropped (guide §5 — reuse beats recompute when the reused
+    # first action (guide §5 — reuse beats recompute when the reused
     # stage is the expensive one).  At scale this trades one spill-backed
     # cache of the (doc, bigram) counts for two full re-tokenizations.
-    train_bi = train_bi.persist()
+    train_bi = reuse(train_bi)
     if train_docs is None:
         doc_bi = train_bi
     c2 = (train_bi.groupBy("bigram").agg(F.sum("tf").alias("c2"))

@@ -27,6 +27,7 @@ import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.window import Window
 
+from ..scale import reuse
 from .textual import tokens, word_ngrams
 
 
@@ -188,8 +189,8 @@ def minhash_lsh_candidates(
     """
     # persist: the exploded signature table is read from both join sides;
     # at cluster scale this would be a checkpoint to parquet instead
-    exploded = band_signature_rows(
-        df, id_col, text_col, num_hashes, bands, shingle_size).persist()
+    exploded = reuse(band_signature_rows(
+        df, id_col, text_col, num_hashes, bands, shingle_size))
     # Cap bucket size with a count-over-window: ONE shuffle on (band, bsig)
     # that also co-locates rows for the self-join below, vs the former
     # groupBy + join-back (two shuffles + a join).
@@ -964,15 +965,14 @@ def incremental_near_dup(
     `minhash_lsh_candidates`; the verify join touches candidate pairs
     only.  Ids must be disjoint across the two tables (they share one id
     space by contract, as in any versioned ingest)."""
-    tagged = (
+    # consumed by the LSH pass, the flag projections, and the exact
+    # jaccard verify — lazy within-invocation persist reads the source
+    # once (the bigram_lm_score lesson)
+    tagged = reuse(
         new_batch.select(F.col(id_col), F.col(text_col),
                          F.lit(True).alias("__new"))
         .unionByName(corpus.select(F.col(id_col), F.col(text_col),
                                    F.lit(False).alias("__new")))
-        # consumed by the LSH pass, the flag projections, and the exact
-        # jaccard verify — lazy within-invocation persist reads the
-        # source once (the bigram_lm_score lesson)
-        .persist()
     )
     cand = minhash_lsh_candidates(tagged, id_col, text_col, **lsh_kwargs)
     flags = tagged.select(F.col(id_col), F.col("__new"))
@@ -988,13 +988,13 @@ def incremental_near_dup(
     # and the final hits join) and is tiny (capped LSH buckets), while
     # its lineage — the full signature + band self-join — is the
     # expensive part: persist so candidate generation runs once.
-    oriented = sided.select(
+    oriented = reuse(sided.select(
         F.when(F.col("new_a"), F.col("id_a")).otherwise(F.col("id_b"))
          .alias("doc_id_n"),
         F.when(F.col("new_a"), F.col("id_b")).otherwise(F.col("id_a"))
          .alias("match_id_n"),
         "id_a", "id_b",
-    ).persist()
+    ))
     # pairs lineage here IS the band join (unmaterialized): pruning
     # would re-run candidate generation to save a shingle pass — net loss
     verified = ngram_jaccard_pairs(

@@ -31,6 +31,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from ..scale import reuse
 from .corpus import clean_tokens
 
 
@@ -86,11 +87,10 @@ def importance_weights(raw: DataFrame, target: DataFrame,
     # does not fire across these branches; the bigram_lm_score lesson).
     # Lazy within-invocation persists: features once, and the two
     # <= `buckets`-row models once each.
-    raw_feats = _bucketed_features(raw, id_col, text_col, n, buckets).persist()
-    t_counts = (bucket_distribution(target, id_col, text_col, n, buckets)
-                .persist())
-    r_counts = (raw_feats.groupBy("bucket")
-                .agg(F.count(F.lit(1)).alias("cnt")).persist())
+    raw_feats = reuse(_bucketed_features(raw, id_col, text_col, n, buckets))
+    t_counts = reuse(bucket_distribution(target, id_col, text_col, n, buckets))
+    r_counts = reuse(raw_feats.groupBy("bucket")
+                     .agg(F.count(F.lit(1)).alias("cnt")))
     t_total = t_counts.agg(F.sum("cnt").alias("t_total"))
     r_total = r_counts.agg(F.sum("cnt").alias("r_total"))
     # log-ratio per bucket; buckets unseen in either model fall back to the

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..errors import TabsdataSparkError
 from ..io.plugin import DestinationPlugin, SourcePlugin
+from ..scale import invocation
 from ..store.table_store import TableStore
 from ..tableframe._system import new_system_id
 from ..tableframe.frame import TableFrame
@@ -145,61 +146,66 @@ class PubSubEngine:
         # lazy reads over files written into it, materialized only at
         # store.write below (reference contract: chunk() writes parquet to
         # working_dir and returns paths, _io/plugin.py).
-        workdir = tempfile.TemporaryDirectory(prefix="td-run-")
-        try:
-            inputs, offset_update, pops_offsets = self._load_inputs(
-                collection, fn, workdir.name)
-            result = fn(*inputs)
-            outputs = _as_list(result)
-            if pops_offsets:
-                # reference FUNCTION offset mode (execution_utils.
-                # update_initial_values): the trailing element of the
-                # return is the new offsets dict; a bare-dict return
-                # publishes nothing (the reference yields `(None,)`)
-                if not outputs or not isinstance(outputs[-1], dict):
-                    raise TabsdataSparkError(
-                        f"{key}: the source uses initial_values offsets —"
-                        " the function must return the new offsets dict as"
-                        " its last element")
-                offset_update.update(outputs[-1])
-                outputs = outputs[:-1]
-                if not outputs:
-                    # "no new data" run: publish nothing for EVERY output
-                    # table.  The reference's update_initial_values yields
-                    # a single (None,) regardless of output-table count;
-                    # this generalizes that to one None per output table
-                    # so multi-output publishers are handled uniformly.
-                    outputs = [None] * len(fn.output_tables)
-            published: dict[str, str] = {}
-            with self.store.transaction() as txn:
-                if fn.kind == "subscriber":
-                    self._deliver(fn, outputs)
-                else:
-                    if len(outputs) != len(fn.output_tables):
+        # The invocation scope owns every frame the function's operators
+        # persist (scale.reuse): they materialize inside store.write, so
+        # the scope closes only after the commit.
+        with tempfile.TemporaryDirectory(prefix="td-run-") as workdir, \
+                invocation():
+            try:
+                inputs, offset_update, pops_offsets = self._load_inputs(
+                    collection, fn, workdir)
+                result = fn(*inputs)
+                outputs = _as_list(result)
+                if pops_offsets:
+                    # reference FUNCTION offset mode (execution_utils.
+                    # update_initial_values): the trailing element of the
+                    # return is the new offsets dict; a bare-dict return
+                    # publishes nothing (the reference yields `(None,)`)
+                    if not outputs or not isinstance(outputs[-1], dict):
                         raise TabsdataSparkError(
-                            f"{key}: returned {len(outputs)} frames for "
-                            f"{len(fn.output_tables)} output tables")
-                    for frame, table in zip(outputs, fn.output_tables):
-                        if frame is None:
-                            continue
-                        ver = self.store.write(
-                            frame, collection, table, txn_id=txn,
-                            execution_id=execution_id,
-                            partition_by=fn.partition_by.get(table))
-                        published[_norm(collection, table)] = ver
-                if offset_update:
-                    for k, v in offset_update.items():
-                        self.store.meta.set_offset(collection, fn.name, k, v)
-            self.store.meta.set_run_status(run_id, "committed")
-            log(run_id, "committed: " + (", ".join(
-                f"{t}@{v}" for t, v in published.items()) or "(no tables)"))
-            return RunReport(key, "committed", published)
-        except Exception as e:  # noqa: BLE001 - report, don't crash the loop
-            self.store.meta.set_run_status(run_id, "failed")
-            log(run_id, f"failed: {type(e).__name__}: {e}")
-            return RunReport(key, "failed", error=f"{type(e).__name__}: {e}")
-        finally:
-            workdir.cleanup()
+                            f"{key}: the source uses initial_values offsets"
+                            " — the function must return the new offsets"
+                            " dict as its last element")
+                    offset_update.update(outputs[-1])
+                    outputs = outputs[:-1]
+                    if not outputs:
+                        # "no new data" run: publish nothing for EVERY output
+                        # table.  The reference's update_initial_values yields
+                        # a single (None,) regardless of output-table count;
+                        # this generalizes that to one None per output table
+                        # so multi-output publishers are handled uniformly.
+                        outputs = [None] * len(fn.output_tables)
+                published: dict[str, str] = {}
+                with self.store.transaction() as txn:
+                    if fn.kind == "subscriber":
+                        self._deliver(fn, outputs)
+                    else:
+                        if len(outputs) != len(fn.output_tables):
+                            raise TabsdataSparkError(
+                                f"{key}: returned {len(outputs)} frames for "
+                                f"{len(fn.output_tables)} output tables")
+                        for frame, table in zip(outputs, fn.output_tables):
+                            if frame is None:
+                                continue
+                            ver = self.store.write(
+                                frame, collection, table, txn_id=txn,
+                                execution_id=execution_id,
+                                partition_by=fn.partition_by.get(table))
+                            published[_norm(collection, table)] = ver
+                    if offset_update:
+                        for k, v in offset_update.items():
+                            self.store.meta.set_offset(
+                                collection, fn.name, k, v)
+                self.store.meta.set_run_status(run_id, "committed")
+                log(run_id, "committed: " + (", ".join(
+                    f"{t}@{v}" for t, v in published.items())
+                    or "(no tables)"))
+                return RunReport(key, "committed", published)
+            except Exception as e:  # noqa: BLE001 - report, don't crash
+                self.store.meta.set_run_status(run_id, "failed")
+                log(run_id, f"failed: {type(e).__name__}: {e}")
+                return RunReport(key, "failed",
+                                 error=f"{type(e).__name__}: {e}")
 
     # -- isolated run ---------------------------------------------------
     def _run_isolated(self, key: str, execution_id: str,

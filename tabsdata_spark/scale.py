@@ -17,13 +17,59 @@ splitting.  The helpers here cover the cases AQE cannot fix:
 
 Both are semantics-preserving rewrites: results are identical to the
 direct form (tests assert equality on the synthetic tables).
+
+This module also owns the lifetime of persisted intermediates:
+
+- `reuse`: an operator that reads one intermediate frame more than once
+  persists it here instead of calling `df.persist()` itself.
+- `invocation`: the caller that owns a run (a pub/sub function run, one
+  bench or oracle-check query) opens a scope; on exit every frame reused
+  inside it is unpersisted.  Nothing else unpersists.
 """
 
 from __future__ import annotations
 
+import contextvars
+from contextlib import contextmanager
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
+
+_scopes: contextvars.ContextVar[tuple[list[DataFrame], ...]] = \
+    contextvars.ContextVar("tabsdata_spark_invocation_scopes", default=())
+
+
+def reuse(df: DataFrame) -> DataFrame:
+    """Persist `df` (lazily: blocks materialize inside the caller's first
+    action) and register it with the innermost active `invocation`
+    scope, which unpersists it on exit.  Outside any scope this is a bare
+    `df.persist()` and the frame lives until the caller unpersists it."""
+    scopes = _scopes.get()
+    if scopes:
+        scopes[-1].append(df)
+    return df.persist()
+
+
+@contextmanager
+def invocation():
+    """Scope that owns the frames `reuse`d inside it: on exit, normal or
+    by exception, each is unpersisted (non-blocking, newest first, so no
+    still-cached frame is re-planned over one being dropped).
+
+    The scope is per thread/task (a `contextvars` stack), so concurrent
+    runs each release only their own frames.  Caches are keyed by plan,
+    though: a concurrent run whose identical plan hit the same cache entry
+    loses it when this scope exits, and then recomputes from lineage —
+    never stale data."""
+    frames: list[DataFrame] = []
+    token = _scopes.set(_scopes.get() + (frames,))
+    try:
+        yield
+    finally:
+        _scopes.reset(token)
+        for df in reversed(frames):
+            df.unpersist(blocking=False)
 
 
 def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:

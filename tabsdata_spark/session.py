@@ -12,11 +12,15 @@ local[32] test harness and a 1000-executor cluster.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("TDSPARK_SHUFFLE_PARTITIONS", "32"))
+CODEGEN_CACHE_ENTRIES = "5000"
+
+_log = logging.getLogger(__name__)
 
 
 def get_spark(
@@ -56,18 +60,20 @@ def get_spark(
         # readers re-derive timestamps via timestamp_micros(ns div 1000)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("TDSPARK_DRIVER_MEM", "8g"))
-        # ContextCleaner reclaims dropped DataFrames' cached / broadcast /
-        # localCheckpoint blocks only after a JVM GC processes their weak
-        # references, and its safety-net GC fires every 30min by default —
-        # longer than a whole multi-query batch.  In local mode (driver ==
-        # executor JVM) hundreds of sequential queries accumulate dead
-        # blocks that squeeze the unified memory pool into GC storms
-        # (measured: an isolated 1.0s query read 30.9s after 20 heavy
-        # queries on the default; 45s periodic GC removed the spike with
-        # the identical workload — see OPTIMIZATION_r11.md).  On a real
-        # cluster this costs one driver System.gc() per interval: noise.
-        .config("spark.cleaner.periodicGC.interval",
-                os.environ.get("TDSPARK_PERIODIC_GC", "45s"))
+        # The ContextCleaner reclaims the localCheckpoint, broadcast and
+        # shuffle state of dropped DataFrames only after a JVM GC
+        # processes their weak references, and its safety-net GC fires
+        # every 30min by default — longer than a whole multi-query batch.
+        # (Dataset persists are not among them: the CacheManager holds
+        # those strongly until scale.invocation unpersists them.)  In
+        # local mode (driver == executor JVM) hundreds of sequential
+        # queries accumulate dead blocks that squeeze the unified memory
+        # pool into GC storms (measured: an isolated 1.0s query read 30.9s
+        # after 20 heavy queries on the default; 45s periodic GC removed
+        # the spike with the identical workload — see
+        # OPTIMIZATION_r11.md).  On a real cluster this costs one driver
+        # System.gc() per interval: noise.
+        .config("spark.cleaner.periodicGC.interval", "45s")
         # The whole-stage-codegen class cache holds only 100 entries by
         # default (static conf).  A multi-query application compiles ~5-10
         # codegen units per query, so after ~20 distinct queries earlier
@@ -80,10 +86,18 @@ def get_spark(
         # OPTIMIZATION_r11.md).  Cost: cached GeneratedClass metadata in
         # metaspace (~30KB/entry, ~150MB at 5000) — bounded and equally
         # valid on a cluster, where executors keep their own cache.
-        .config("spark.sql.codegen.cache.maxEntries",
-                os.environ.get("TDSPARK_CODEGEN_CACHE", "5000"))
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    # static conf: the builder's value is silently ignored when
+    # getOrCreate attaches to a session already running in this JVM
+    codegen_cache = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    if codegen_cache != CODEGEN_CACHE_ENTRIES:
+        _log.warning(
+            "spark.sql.codegen.cache.maxEntries is %s, not %s (static conf:"
+            " set by an existing session or extra_conf)", codegen_cache,
+            CODEGEN_CACHE_ENTRIES)
+    return spark

@@ -8,16 +8,23 @@ from a small pool overlaps all that waiting without changing a single
 program: generation stays SEQUENTIAL on the seeded rng (bit-identical
 program streams), only execution is concurrent.  Each program must use
 its own DuckDB connection (the module-level default connection is not
-thread-safe).  Exceptions (including assertion failures) propagate to
-the caller on the first failed program.
+thread-safe).  The first failed program (an exception or assertion
+failure) cancels every program still queued and propagates to the
+caller once the programs already running finish.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
 
 def run_concurrent(programs, run_one, workers: int = 6) -> None:
-    with ThreadPoolExecutor(max_workers=workers) as ex:
-        for _ in ex.map(run_one, programs):
-            pass
+    ex = ThreadPoolExecutor(max_workers=workers)
+    try:
+        futures = [ex.submit(run_one, p) for p in programs]
+        done, _ = wait(futures, return_when=FIRST_EXCEPTION)
+        for f in futures:
+            if f in done and f.exception() is not None:
+                raise f.exception()
+    finally:
+        ex.shutdown(cancel_futures=True)

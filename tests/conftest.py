@@ -34,3 +34,21 @@ def tiny(spark):
     return td.TableFrame.from_spark(
         spark.createDataFrame(rows, "a long, b double, s string")
     )
+
+
+@pytest.fixture()
+def cache_state(spark):
+    """Release the cached frames and persistent RDDs earlier tests left in
+    the shared session, then return a probe of the current cache state:
+    (CacheManager empty, number of persistent RDDs)."""
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    for rdd in list(jsc.getPersistentRDDs().values()):
+        rdd.unpersist(True)
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+
+    def probe():
+        return cache_manager.isEmpty(), jsc.getPersistentRDDs().size()
+
+    assert probe() == (True, 0)
+    return probe

@@ -2,7 +2,10 @@
 
 from __future__ import annotations
 
+from datetime import datetime, timedelta
+
 import pyspark.sql.functions as F
+import pytest
 
 from tabsdata_spark import scale
 
@@ -381,3 +384,76 @@ def test_shard_assign_and_auto_salted_arg_contracts(spark):
     empty = spark.createDataFrame([], "k long, v double")
     assert scale.auto_salted_agg(
         empty, "k", {"n": ("count", None)}).count() == 0
+
+
+_DOCS = [(0, "the quick brown fox jumps over the lazy dog today"),
+         (1, "completely unrelated text about spark physical plans"),
+         (2, "the quick brown fox jumps over the lazy dog again")]
+_BATCH = [(10, "the quick brown fox jumps over the lazy dog now"),
+          (11, "another new document entirely on its own topic")]
+_EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 3), (6, 1)]
+
+
+def _persisting_ops():
+    from tabsdata_spark import extensions, graph
+    from tabsdata_spark.llm import corpus, dedup, dsir
+
+    def docs(spark, rows=_DOCS):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    def edges(spark):
+        return spark.createDataFrame(_EDGES, "s long, d long")
+
+    def events(spark):
+        t0 = datetime(2024, 1, 30, 22)
+        return spark.createDataFrame(
+            [(t0 + timedelta(hours=7 * i), float(i)) for i in range(12)],
+            "ts timestamp, value double")
+
+    return {
+        "bigram_lm_score": lambda s: corpus.bigram_lm_score(docs(s)),
+        "minhash_lsh_candidates": lambda s: dedup.minhash_lsh_candidates(
+            docs(s), max_bucket=10),
+        "incremental_near_dup": lambda s: dedup.incremental_near_dup(
+            docs(s, _BATCH), docs(s), threshold=0.4, max_bucket=10),
+        "importance_weights": lambda s: dsir.importance_weights(
+            docs(s, _BATCH), docs(s)),
+        "degree_assortativity": lambda s: graph.degree_assortativity(
+            edges(s), "s", "d"),
+        "hierarchical_rollup": lambda s: extensions.hierarchical_rollup(
+            events(s), "ts", "value"),
+        "pagerank_exact": lambda s: graph.pagerank_exact(
+            edges(s), "s", "d", driver_threshold=0),
+        "hits_exact": lambda s: graph.hits_exact(
+            edges(s), "s", "d", driver_threshold=0),
+        "ppr_exact": lambda s: graph.ppr_exact(
+            edges(s), "s", "d", s.createDataFrame([(3,)], "node long"),
+            "node", driver_threshold=0),
+        "kcore_peel": lambda s: graph.kcore_peel(
+            edges(s), "s", "d", k=2, driver_threshold=0),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_persisting_ops()))
+def test_invocation_releases_operator_persists(spark, cache_state, op):
+    """Leak canary: every frame an operator persists for reuse is cached
+    while its invocation runs and released when the scope exits."""
+    with scale.invocation():
+        assert _persisting_ops()[op](spark).collect()
+        assert cache_state()[1] > 0
+    assert cache_state() == (True, 0)
+
+
+def test_invocation_releases_on_error_and_nests(spark, cache_state):
+    outer = scale.reuse(spark.range(10))
+    with pytest.raises(RuntimeError):
+        with scale.invocation():
+            scale.reuse(spark.range(20)).count()
+            with scale.invocation():
+                scale.reuse(spark.range(30)).count()
+            assert cache_state()[1] == 1   # inner scope released its own
+            raise RuntimeError("run failed")
+    outer.count()
+    # only the frame reused outside any scope is still cached
+    assert cache_state() == (False, 1)
+    outer.unpersist(True)

@@ -949,3 +949,49 @@ def test_fixed_id_accepts_reference_grammar():
     with I/L/O/U must parse even though our generator never emits them."""
     v = Version.parse("ILOU56789ABCDEFGHIJKLMNOPQ")
     assert v.fixed == "ILOU56789ABCDEFGHIJKLMNOPQ"
+
+
+def test_transformer_runs_leave_no_persisted_frames(spark, tmp_path,
+                                                    cache_state):
+    """Leak canary: a self-dependent incremental near-dup transformer
+    persists intermediates on every new version of its input; each run's
+    invocation scope must release them, so nothing piles up across
+    triggers."""
+    from tabsdata_spark.llm.dedup import incremental_near_dup
+
+    src = tmp_path / "in"
+    src.mkdir()
+    store = TableStore(str(tmp_path / "wh"))
+    engine = PubSubEngine(spark, store)
+
+    @td.publisher(td.LocalFileSource(str(src / "*.csv"), format="csv"),
+                  tables="raw")
+    def pub(tf):
+        return tf
+
+    @td.transformer(input_tables=["raw", "corpus@HEAD"],
+                    output_tables=["corpus"], trigger_by=["raw"])
+    def near_dedup(batch, corpus):
+        if corpus is None:
+            return batch
+        hits = incremental_near_dup(batch.to_spark(), corpus.to_spark(),
+                                    threshold=0.4, max_bucket=10)
+        kept = batch.to_spark().join(hits.select("doc_id"), "doc_id",
+                                     "left_anti")
+        return td.concat([corpus, td.TableFrame.from_spark(kept)])
+
+    engine.register("c", pub)
+    engine.register("c", near_dedup)
+    texts = ["the quick brown fox jumps over the lazy dog",
+             "spark plans physical operators for every query"]
+    for i in range(3):
+        for old in src.iterdir():
+            os.utime(old, (0, 0))
+        (src / f"b{i}.csv").write_text(
+            "doc_id,text\n" + "".join(
+                f"{10 * i + j},{t} v{i}\n" for j, t in enumerate(texts)))
+        reps = engine.trigger("c", "pub")
+        assert [r.status for r in reps] == ["committed", "committed"], reps
+        assert cache_state() == (True, 0), f"after trigger {i + 1}"
+    corpus = store.read(spark, "c", "corpus").to_dict()
+    assert sorted(corpus["doc_id"]) == [0, 1]   # later versions near-dups

@@ -132,6 +132,7 @@ def main():
 
     import __spark_entry__ as entrymod
     import tabsdata_spark as td
+    from tabsdata_spark.scale import invocation
 
     if vanilla:
         # Driver-parity mode: a plain Spark 4 session (ANSI on, no legacy
@@ -218,9 +219,10 @@ def main():
             continue
         t0 = _time.monotonic()
         try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
+            with invocation():
+                sdf = fn(spark, sf_dir)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             print(f"FAIL  {name}: spark error: {type(e).__name__} {str(e)[:200]}")
             failed += 1
