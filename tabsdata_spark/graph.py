@@ -1,7 +1,11 @@
 """Graph algorithms as DataFrame iterations (Pregel-style, no RDDs).
 
-Connected components live in `llm.dedup` (min-label propagation and
-large-star/small-star).  Here: PageRank by unrolled power iteration.
+Here: PageRank (`pagerank`, directed and weighted, by unrolled power
+iteration), its bit-exact undirected and personalized siblings
+(`pagerank_exact`, `ppr_exact`), HITS (`hits_exact`), bounded-round
+k-core peeling (`kcore_peel`), degree assortativity and Markov
+removal-effect attribution.  Connected components live in `llm.dedup`
+(min-label propagation and large-star/small-star).
 
 Scale notes: each iteration is one shuffle-join of the rank vector against
 the edge list keyed on src plus one groupBy on dst — the same shape GraphX
@@ -10,15 +14,23 @@ scan-partitioned.  For long iteration counts, localCheckpoint every few
 rounds truncates lineage (same trap as connected components); for the
 typical 3-20 iterations the unrolled plan is fine and lets Catalyst
 pipeline scans.
+
+Small graphs: the iterative operators ask `scale.small_input` for their
+edge arrays and, below `driver_threshold` edges, replay the identical
+recursion on numpy in the driver (`_*_driver`).  Both paths read one edge
+projection (`_edges` / `_symmetric`), where an edge with a null endpoint
+is dropped: as in a SQL join, a null id connects nothing.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql.types import (DoubleType, LongType, StringType, StructField,
+                               StructType)
 
-from .scale import reuse
+from .scale import reuse, small_input
 
 #: Below this many (directed) edge rows the exact iterative operators run
 #: their recursion in the driver on numpy arrays instead of scheduling
@@ -34,6 +46,15 @@ from .scale import reuse
 DRIVER_EDGE_THRESHOLD = 4_000_000
 
 
+def _edges(edges: DataFrame, src: str, dst: str, a: str = "u",
+           b: str = "v", *extra: Column) -> DataFrame:
+    """The (a, b, *extra) edge projection every graph operator reads.  An
+    edge with a null endpoint is dropped — as in a SQL join, a null id
+    connects nothing — so the driver and distributed paths see one graph."""
+    return (edges.filter(F.col(src).isNotNull() & F.col(dst).isNotNull())
+            .select(F.col(src).alias(a), F.col(dst).alias(b), *extra))
+
+
 # NOTE (r11, measured and REJECTED): building the symmetric closure as
 # distinct(least,greatest) THEN union-both-orientations halves the dedup
 # exchange input, but the canonical subtree feeds BOTH union branches and
@@ -41,17 +62,28 @@ DRIVER_EDGE_THRESHOLD = 4_000_000
 # old shape FASTER (1.161 vs 1.246 med over 6 alternations, identical
 # 1,173,742-edge sets).  Keep distinct-after-union.
 
-def _edges_to_numpy(df: DataFrame, c1: str, c2: str):
-    """Collect a two-column frame into a pair of numpy arrays via Arrow
-    (zero-copy for numeric ids).  Returns None when the Arrow collect
-    fails so callers fall back to the distributed path."""
-    try:
-        tbl = df.select(c1, c2).toArrow()
-        a = tbl.column(0).to_numpy(zero_copy_only=False)
-        b = tbl.column(1).to_numpy(zero_copy_only=False)
-        return a, b
-    except Exception:
-        return None
+def _symmetric(edges: DataFrame, src: str, dst: str, a: str = "u",
+               b: str = "v") -> DataFrame:
+    """The undirected edge set: every edge in both orientations, deduped."""
+    e = _edges(edges, src, dst, a, b)
+    return e.unionAll(e.select(F.col(b).alias(a), F.col(a).alias(b))) \
+        .distinct()
+
+
+def _node_frame(e: DataFrame, node_col: str, fields: list[StructField],
+                columns) -> DataFrame:
+    """A driver path's result: `node` keeps the dtype of `e[node_col]`
+    (the caller's id type), then `fields`, filled row-wise from the
+    equal-length numpy `columns` (none for an empty result)."""
+    rows = list(zip(*(c.tolist() for c in columns)))
+    if not rows:  # an empty projection of e collects without a Spark job,
+        # unlike a parallelized empty list
+        return e.select(F.col(node_col).alias("node"),
+                        *[F.lit(None).cast(f.dataType).alias(f.name)
+                          for f in fields]).limit(0)
+    schema = StructType([StructField("node", e.schema[node_col].dataType),
+                         *fields])
+    return e.sparkSession.createDataFrame(rows, schema)
 
 
 def _index_nodes(nodes, *cols):
@@ -59,44 +91,32 @@ def _index_nodes(nodes, *cols):
     return [np.searchsorted(nodes, c) for c in cols]
 
 
-def _pagerank_driver(e: DataFrame, iterations: int,
-                     damping: float) -> DataFrame | None:
-    """Driver-side replay of `pagerank`'s float recursion over a
-    collected (src, dst, w) edge table — for BOUNDED transition graphs
+def _pagerank_driver(e: DataFrame, s, d, w, iterations: int,
+                     damping: float) -> DataFrame:
+    """Driver-side replay of `pagerank`'s float recursion over the
+    (src, dst, w) edge arrays — for BOUNDED transition graphs
     (label/event-type chains) where each iteration's joins cost
     scheduled jobs, not data (the markov_attribution bounded-collect
     precedent).  Same elementwise IEEE arithmetic; float contribution
     sums accumulate in edge order (np.add.at), which — like the
     distributed partial aggs — is one of the orderings `pagerank`'s
-    round-6 output contract already tolerates.  Returns None when the
-    Arrow collect fails."""
-    try:
-        tbl = e.select("src", "dst", "w").toArrow()
-        s = tbl.column(0).to_numpy(zero_copy_only=False)
-        d = tbl.column(1).to_numpy(zero_copy_only=False)
-        w = tbl.column(2).to_numpy(zero_copy_only=False).astype(np.float64)
-    except Exception:
-        return None
+    round-6 output contract already tolerates."""
+    w = w.astype(np.float64)
     nodes = np.unique(np.concatenate([s, d]))
     si, di = _index_nodes(nodes, s, d)
     n = len(nodes)
     out_w = np.zeros(n, dtype=np.float64)
     np.add.at(out_w, si, w)
     p = w / out_w[si]
-    rank = np.full(n, 1.0 / np.float64(n))
-    base = (1.0 - damping) / np.float64(n)
+    # max(n, 1): an empty graph has no nodes, so no rank is ever read
+    rank = np.full(n, 1.0 / np.float64(max(n, 1)))
+    base = (1.0 - damping) / np.float64(max(n, 1))
     for _ in range(iterations):
         mass = np.zeros(n, dtype=np.float64)
         np.add.at(mass, di, rank[si] * p)
         rank = base + damping * mass
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType([
-        StructField("node", e.schema["src"].dataType),
-        StructField("rank", DoubleType()),
-    ])
-    res = e.sparkSession.createDataFrame(
-        list(zip(nodes.tolist(), rank.tolist())), schema)
+    res = _node_frame(e, "src", [StructField("rank", DoubleType())],
+                      (nodes, rank))
     return res.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -123,12 +143,11 @@ def pagerank(edges: DataFrame, iterations: int = 3, damping: float = 0.85,
     (event-type transitions) opt in explicitly.
     """
     w = F.col(weight).cast("double") if weight else F.lit(1.0)
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"),
-                     w.alias("w"))
-    if driver_threshold and e.count() <= driver_threshold:
-        res = _pagerank_driver(e, iterations, damping)
-        if res is not None:
-            return res
+    e = _edges(edges, src, dst, "src", "dst", w.alias("w"))
+    if driver_threshold:
+        _, arrs = small_input(e, driver_threshold, "src", "dst", "w")
+        if arrs is not None:
+            return _pagerank_driver(e, *arrs, iterations, damping)
     out = e.groupBy("src").agg(F.sum("w").alias("out_w"))
     # transition probability per edge; broadcast-sized for label graphs,
     # co-partitioned shuffle join for billion-edge graphs
@@ -159,39 +178,30 @@ def pagerank(edges: DataFrame, iterations: int = 3, damping: float = 0.85,
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
-def _pagerank_exact_driver(und: DataFrame, iters: int,
-                           damping: float) -> DataFrame | None:
-    """Driver-side replay of pagerank_exact's recursion over a collected
-    edge array.  Bit-exact vs the distributed path: degrees are exact
+def _pagerank_exact_driver(und: DataFrame, u, v, iters: int,
+                           damping: float) -> DataFrame:
+    """Driver-side replay of pagerank_exact's recursion over the edge
+    arrays.  Bit-exact vs the distributed path: degrees are exact
     integer bincounts; per-edge contributions floor((pr/deg)*1e12+0.5)
     are elementwise IEEE doubles quantized to int64 and summed as exact
     integers (partitioning- and order-independent, same as the
     decimal(38,0) sums); the damping update is the same fixed IEEE
-    expression.  Returns None when the Arrow collect fails."""
-    arrs = _edges_to_numpy(und, "u", "v")
-    if arrs is None:
-        return None
-    u, v = arrs
+    expression.  An empty graph yields no nodes and no ranks."""
     # und is symmetric, so every node appears on the u side
     nodes = np.unique(u)
     ui, vi = _index_nodes(nodes, u, v)
     deg = np.bincount(ui, minlength=len(nodes)).astype(np.float64)
     n = len(nodes)
-    base = (1.0 - damping) / float(n)
-    pr = np.full(n, 1.0 / float(n))
+    # max(n, 1): an empty graph has no nodes, so no rank is ever read
+    base = (1.0 - damping) / float(max(n, 1))
+    pr = np.full(n, 1.0 / float(max(n, 1)))
     for _ in range(iters):
         m = np.floor(pr / deg * 1e12 + 0.5).astype(np.int64)
         s = np.zeros(n, dtype=np.int64)
         np.add.at(s, vi, m[ui])
         pr = base + damping * (s.astype(np.float64) / 1e12)
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType([
-        StructField("node", und.schema["u"].dataType),
-        StructField("pr", DoubleType()),
-    ])
-    out = und.sparkSession.createDataFrame(
-        list(zip(nodes.tolist(), pr.tolist())), schema)
+    out = _node_frame(und, "u", [StructField("pr", DoubleType())],
+                      (nodes, pr))
     # final rounding stays a Spark expression so display semantics are
     # identical to the distributed path (Java HALF_UP on doubles)
     return out.select("node", F.round("pr", 6).alias("pagerank"))
@@ -223,24 +233,13 @@ def pagerank_exact(edges: DataFrame, src_col: str, dst_col: str,
     # build), and recomputing the upstream edge derivation per round is
     # the dominant cost on join-derived edge lists.  At cluster scale this
     # would be a checkpoint to parquet instead.
-    und = reuse(edges.select(F.col(src_col).alias("u"),
-                             F.col(dst_col).alias("v"))
-                .unionByName(
-                    edges.select(F.col(dst_col).alias("u"),
-                                 F.col(src_col).alias("v")))
-                .distinct())
-    n_edges = und.count()
-    if n_edges == 0:  # empty graph: no nodes, no ranks (the hits_exact
-        # contract), preserving the caller's node dtype in the schema
-        return (edges.select(F.col(src_col).alias("node")).limit(0)
-                .withColumn("pagerank", F.lit(None).cast("double")))
-    if n_edges <= driver_threshold:
-        # small graph: iterative rounds cost scheduled jobs, not data —
-        # run the identical exact recursion in the driver (see
-        # DRIVER_EDGE_THRESHOLD)
-        out = _pagerank_exact_driver(und, iters, damping)
-        if out is not None:
-            return out
+    und = reuse(_symmetric(edges, src_col, dst_col))
+    # small graph, and always an empty one (the distributed path divides
+    # by N): iterative rounds cost scheduled jobs, not data — run the
+    # identical exact recursion in the driver (see DRIVER_EDGE_THRESHOLD)
+    _, arrs = small_input(und, driver_threshold, "u", "v")
+    if arrs is not None:
+        return _pagerank_exact_driver(und, *arrs, iters, damping)
     deg = reuse(und.groupBy("u").agg(F.count(F.lit(1)).alias("deg")))
     n = deg.count()
     base = (1.0 - damping) / float(n)
@@ -264,27 +263,20 @@ def pagerank_exact(edges: DataFrame, src_col: str, dst_col: str,
     return pr.select("node", F.round("pr", 6).alias("pagerank"))
 
 
-def _hits_exact_driver(e: DataFrame, iters: int):
-    """Driver-side replay of hits_exact's half-step ladder over a
-    collected edge array.  Same exactness contract as the distributed
-    modes: picos quantization is elementwise IEEE, contribution and L1
-    totals are exact int64 sums (bounded by edges * 1e12 under
+def _hits_exact_driver(e: DataFrame, u, v, iters: int) -> DataFrame:
+    """Driver-side replay of hits_exact's half-step ladder over the edge
+    arrays.  Same exactness contract as the distributed modes: picos
+    quantization is elementwise IEEE, contribution and L1 totals are
+    exact int64 sums (bounded by edges * 1e12 under
     DRIVER_EDGE_THRESHOLD), and each normalization is one IEEE division
-    per node.  Returns None when the Arrow collect fails or the two
-    endpoint dtypes differ (the union output type would need coercion)."""
-    if e.schema["u"].dataType != e.schema["v"].dataType:
-        return None
-    arrs = _edges_to_numpy(e, "u", "v")
-    if arrs is None:
-        return None
-    u, v = arrs
+    per node.  An empty graph yields no scores."""
     u_nodes = np.unique(u)
     v_nodes = np.unique(v)
     ui = np.searchsorted(u_nodes, u)
     vi = np.searchsorted(v_nodes, v)
     n_u = len(u_nodes)
-    hub = np.full(n_u, 1.0 / float(n_u))
-    auth = None
+    hub = np.full(n_u, 1.0) / n_u
+    auth = np.zeros(len(v_nodes))
     for _ in range(iters):
         qh = np.floor(hub * 1e12 + 0.5).astype(np.int64)
         s = np.zeros(len(v_nodes), dtype=np.int64)
@@ -298,18 +290,12 @@ def _hits_exact_driver(e: DataFrame, iters: int):
         hub = s2.astype(np.float64) / 1e12
         qh2 = np.floor(hub * 1e12 + 0.5).astype(np.int64)
         hub = qh2.astype(np.float64) / np.float64(qh2.sum())
-    from pyspark.sql.types import (DoubleType, StringType, StructField,
-                                   StructType)
-
-    schema = StructType([
-        StructField("node", e.schema["u"].dataType),
-        StructField("role", StringType(), nullable=False),
-        StructField("score", DoubleType()),
-    ])
-    rows = (list(zip(u_nodes.tolist(), ["hub"] * n_u, hub.tolist()))
-            + list(zip(v_nodes.tolist(), ["authority"] * len(v_nodes),
-                       auth.tolist())))
-    out = e.sparkSession.createDataFrame(rows, schema)
+    out = _node_frame(
+        e, "u", [StructField("role", StringType(), nullable=False),
+                 StructField("score", DoubleType())],
+        (np.concatenate([u_nodes, v_nodes]),
+         np.repeat(np.array(["hub", "authority"]), [n_u, len(v_nodes)]),
+         np.concatenate([hub, auth])))
     return out.select("node", "role", F.round("score", 9).alias("score"))
 
 
@@ -358,18 +344,15 @@ def hits_exact(edges: DataFrame, src_col: str, dst_col: str,
 
     # hash by u alone: HashPartitioning(u) still satisfies the (u, v)
     # dedup clustering, and leaves e co-partitioned for the hub joins
-    e = reuse(keyed(edges.select(F.col(src_col).alias("u"),
-                                 F.col(dst_col).alias("v")), "u")
-              .distinct())
-    n_e = e.count()
-    if 0 < n_e <= driver_threshold:
-        # small graph: half-steps cost scheduled jobs/shuffles, not data
-        # — run the identical exact ladder in the driver (see
-        # DRIVER_EDGE_THRESHOLD); n_e == 0 keeps the empty-output shape
-        # of the distributed modes
-        out = _hits_exact_driver(e, iters)
-        if out is not None:
-            return out
+    e = reuse(keyed(_edges(edges, src_col, dst_col), "u").distinct())
+    # small graph: half-steps cost scheduled jobs/shuffles, not data — run
+    # the identical exact ladder in the driver (see DRIVER_EDGE_THRESHOLD).
+    # Endpoints of different dtypes stay distributed: the union of hub and
+    # authority nodes would need the engine's type coercion.
+    if e.schema["u"].dataType == e.schema["v"].dataType:
+        _, arrs = small_input(e, driver_threshold, "u", "v")
+        if arrs is not None:
+            return _hits_exact_driver(e, *arrs, iters)
 
     def quant(c):
         return (F.floor(c * 1e12 + F.lit(0.5))
@@ -423,28 +406,22 @@ def hits_exact(edges: DataFrame, src_col: str, dst_col: str,
     return hubs.unionByName(auths)
 
 
-def _ppr_exact_driver(und: DataFrame, seeds: DataFrame, seed_col: str,
-                      iters: int, damping: float):
+def _ppr_exact_driver(und: DataFrame, u, v, seeds: DataFrame,
+                      seed_col: str, iters: int,
+                      damping: float) -> DataFrame:
     """Driver-side replay of ppr_exact's recursion (see
     _pagerank_exact_driver for the exactness argument; the only deltas
     are the seed-restricted teleport vector and the left-join/COALESCE(0)
-    default, which the dense s-array reproduces).  Returns None to fall
-    back to the distributed path, or (n_seeds, DataFrame|None)."""
-    arrs = _edges_to_numpy(und, "u", "v")
-    if arrs is None:
-        return None
-    try:
-        seed_tbl = seeds.select(F.col(seed_col)).distinct().toArrow()
-        seed_arr = seed_tbl.column(0).to_numpy(zero_copy_only=False)
-    except Exception:
-        return None
-    u, v = arrs
+    default, which the dense s-array reproduces)."""
+    seed_tbl = seeds.select(F.col(seed_col)).distinct().toArrow()
+    seed_arr = seed_tbl.column(0).to_numpy(zero_copy_only=False)
     nodes = np.unique(u)
     ui, vi = _index_nodes(nodes, u, v)
     is_seed = np.isin(nodes, seed_arr)
     n_s = int(is_seed.sum())
-    if n_s == 0:
-        return (0, None)
+    if n_s == 0:  # no seed in the graph: teleport undefined
+        return _node_frame(und, "u",
+                           [StructField("ppr", DoubleType())], ())
     deg = np.bincount(ui, minlength=len(nodes)).astype(np.float64)
     n = len(nodes)
     base = (1.0 - damping) / float(n_s)
@@ -455,15 +432,9 @@ def _ppr_exact_driver(und: DataFrame, seeds: DataFrame, seed_col: str,
         s = np.zeros(n, dtype=np.int64)
         np.add.at(s, vi, m[ui])
         pr = tele + damping * (s.astype(np.float64) / 1e12)
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    schema = StructType([
-        StructField("node", und.schema["u"].dataType),
-        StructField("pr", DoubleType()),
-    ])
-    out = und.sparkSession.createDataFrame(
-        list(zip(nodes.tolist(), pr.tolist())), schema)
-    return (n_s, out.select("node", F.round("pr", 9).alias("ppr")))
+    out = _node_frame(und, "u", [StructField("pr", DoubleType())],
+                      (nodes, pr))
+    return out.select("node", F.round("pr", 9).alias("ppr"))
 
 
 def ppr_exact(edges: DataFrame, src_col: str, dst_col: str,
@@ -485,25 +456,12 @@ def ppr_exact(edges: DataFrame, src_col: str, dst_col: str,
     join + ONE partial-agg shuffle; the degree/seed node table is
     persisted (it re-enters every iteration); |S| is the only driver
     collect."""
-    und = reuse(edges.select(F.col(src_col).alias("u"),
-                             F.col(dst_col).alias("v"))
-                .unionByName(
-                    edges.select(F.col(dst_col).alias("u"),
-                                 F.col(src_col).alias("v")))
-                .distinct())
-    n_edges = und.count()
-    if n_edges <= driver_threshold:
-        # small graph: run the identical exact recursion in the driver
-        # (see DRIVER_EDGE_THRESHOLD); falls through when the Arrow
-        # collect fails
-        res = _ppr_exact_driver(und, seeds, seed_col, iters, damping)
-        if res is not None:
-            n_s, out = res
-            if n_s == 0:  # no seed in the graph: teleport undefined —
-                # empty result, caller's node dtype preserved
-                return (edges.select(F.col(src_col).alias("node")).limit(0)
-                        .withColumn("ppr", F.lit(None).cast("double")))
-            return out
+    und = reuse(_symmetric(edges, src_col, dst_col))
+    # small graph: run the identical exact recursion in the driver (see
+    # DRIVER_EDGE_THRESHOLD)
+    _, arrs = small_input(und, driver_threshold, "u", "v")
+    if arrs is not None:
+        return _ppr_exact_driver(und, *arrs, seeds, seed_col, iters, damping)
     sd = seeds.select(F.col(seed_col).alias("u")).distinct()
     deg = reuse(und.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
                 .join(sd.withColumn("__seed", F.lit(True)), "u", "left")
@@ -512,8 +470,8 @@ def ppr_exact(edges: DataFrame, src_col: str, dst_col: str,
     if n_s == 0:  # no seed appears in the graph: teleport distribution
         # is undefined, so no node carries mass — empty result with the
         # caller's node dtype preserved (the pagerank_exact contract)
-        return (edges.select(F.col(src_col).alias("node")).limit(0)
-                .withColumn("ppr", F.lit(None).cast("double")))
+        return _node_frame(und, "u",
+                           [StructField("ppr", DoubleType())], ())
     base = (1.0 - damping) / float(n_s)
     tele = F.when(F.col("__seed"), F.lit(base)).otherwise(F.lit(0.0))
     pr = deg.select(
@@ -582,17 +540,12 @@ def degree_assortativity(edges: DataFrame, src_col: str,
         .alias("assortativity"))
 
 
-def _kcore_peel_driver(und: DataFrame, k: int, rounds: int):
-    """Vectorized driver-side peel over a collected edge array — the same
-    exact integer recursion as the distributed rounds (degrees are
-    bincounts; a round keeps edges whose BOTH endpoints had degree >= k),
-    just on numpy masks.  Returns None when the Arrow collect fails."""
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    arrs = _edges_to_numpy(und, "a", "b")
-    if arrs is None:
-        return None
-    a, b = arrs
+def _kcore_peel_driver(und: DataFrame, a, b, k: int,
+                       rounds: int) -> DataFrame:
+    """Vectorized driver-side peel over the edge arrays — the same exact
+    integer recursion as the distributed rounds (degrees are bincounts;
+    a round keeps edges whose BOTH endpoints had degree >= k), just on
+    numpy masks."""
     nodes = np.unique(a)  # symmetric: every node appears on the a side
     ai, bi = _index_nodes(nodes, a, b)
     alive = np.ones(len(ai), dtype=bool)
@@ -602,13 +555,8 @@ def _kcore_peel_driver(und: DataFrame, k: int, rounds: int):
         alive &= keep[ai] & keep[bi]
     deg = np.bincount(ai[alive], minlength=len(nodes))
     mask = deg > 0
-    rows = list(zip(nodes[mask].tolist(),
-                    [int(d) for d in deg[mask]]))
-    schema = StructType([
-        StructField("node", und.schema["a"].dataType),
-        StructField("degree", LongType()),
-    ])
-    return und.sparkSession.createDataFrame(rows, schema)
+    return _node_frame(und, "a", [StructField("degree", LongType())],
+                       (nodes[mask], deg[mask]))
 
 
 def kcore_peel(edges: DataFrame, src_col: str, dst_col: str,
@@ -632,16 +580,10 @@ def kcore_peel(edges: DataFrame, src_col: str, dst_col: str,
     (the connected-components small-graph precedent) — iterative
     rounds cost JOBS, not data, on small graphs, and the numpy peel
     is the identical exact integer recursion."""
-    und = reuse(edges.select(F.col(src_col).alias("a"),
-                             F.col(dst_col).alias("b"))
-                .unionAll(edges.select(F.col(dst_col).alias("a"),
-                                       F.col(src_col).alias("b")))
-                .distinct())
-    n_edges = und.count()
-    if n_edges <= driver_threshold:
-        out = _kcore_peel_driver(und, k, rounds)
-        if out is not None:
-            return out
+    und = reuse(_symmetric(edges, src_col, dst_col, "a", "b"))
+    _, arrs = small_input(und, driver_threshold, "a", "b")
+    if arrs is not None:
+        return _kcore_peel_driver(und, *arrs, k, rounds)
     cur = und
     for _ in range(rounds):
         deg = cur.groupBy("a").agg(F.count(F.lit(1)).alias("__d"))

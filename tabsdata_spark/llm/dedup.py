@@ -27,7 +27,8 @@ import pyspark.sql.types as T
 from pyspark.sql import Column, DataFrame
 from pyspark.sql.window import Window
 
-from ..scale import reuse
+from ..graph import _edges, _symmetric
+from ..scale import reuse, small_input
 from .textual import tokens, word_ngrams
 
 
@@ -459,11 +460,11 @@ def embedding_near_dup_pairs(
 SMALL_GRAPH_EDGES = 200_000
 
 
-def _driver_union_find(e: DataFrame) -> DataFrame:
-    """Small-graph CC fast path: collect the (bounded, see
-    SMALL_GRAPH_EDGES) edge list, run union-find with path compression +
+def _driver_union_find(e: DataFrame, us, vs) -> DataFrame:
+    """Small-graph CC fast path: union-find with path compression +
     union-by-label (component = min node id, matching the distributed
-    contract exactly), return (node, component) as a DataFrame.
+    contract exactly) over the (bounded, see SMALL_GRAPH_EDGES) edge
+    arrays of `e`, returned as a (node, component) DataFrame.
 
     O(E α(E)) sequential beats O(log n) distributed *rounds* whenever the
     edge list is a few MB: each Spark round costs several scheduled jobs +
@@ -479,9 +480,7 @@ def _driver_union_find(e: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    rows = e.collect()
-    for r in rows:
-        u, v = r[0], r[1]
+    for u, v in zip(us.tolist(), vs.tolist()):
         parent.setdefault(u, u)
         parent.setdefault(v, v)
         ru, rv = find(u), find(v)
@@ -522,7 +521,8 @@ def _round_width(spark, n_rows: int, rows_per_part: int = 100_000):
 
 def connected_components(edges: DataFrame, src: str = "id_a",
                          dst: str = "id_b", max_iter: int = 20,
-                         small_graph_threshold: int | None = None) -> DataFrame:
+                         small_graph_threshold: int = SMALL_GRAPH_EDGES
+                         ) -> DataFrame:
     """Connected components by min-label propagation: each node repeatedly
     adopts the smallest label among itself and its neighbors until a fixed
     point.  Converges in O(component diameter) rounds; near-dup graphs are
@@ -536,16 +536,10 @@ def connected_components(edges: DataFrame, src: str = "id_a",
 
     Returns (node, component) where component = min node id reachable.
     """
-    u, v = F.col(src).alias("u"), F.col(dst).alias("v")
-    sym = (edges.select(u, v)
-           .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-           .distinct())
-    sym = sym.localCheckpoint(eager=True)
-    n_edges = sym.count()
-    small = SMALL_GRAPH_EDGES if small_graph_threshold is None \
-        else small_graph_threshold
-    if n_edges <= small:
-        return _driver_union_find(sym)
+    sym = _symmetric(edges, src, dst).localCheckpoint(eager=True)
+    n_edges, arrs = small_input(sym, small_graph_threshold, "u", "v")
+    if arrs is not None:
+        return _driver_union_find(sym, *arrs)
     with _round_width(sym.sparkSession, n_edges):
         labels = (sym.select(F.col("u").alias("node"))
                   .union(sym.select(F.col("v").alias("node"))).distinct()
@@ -592,7 +586,8 @@ def connected_components_star(edges: DataFrame, src: str = "id_a",
                               dst: str = "id_b",
                               max_iter: int = 30,
                               check_every: int = 2,
-                              small_graph_threshold: int | None = None) -> DataFrame:
+                              small_graph_threshold: int = SMALL_GRAPH_EDGES
+                              ) -> DataFrame:
     """Connected components by alternating large-star / small-star edge
     rewrites (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC 2014).  Converges in O(log^2 n) rounds *independent of
@@ -606,15 +601,11 @@ def connected_components_star(edges: DataFrame, src: str = "id_a",
     full round.  At the fixed point the edge set is a forest of stars,
     every non-root pointing straight at its component minimum.
     """
-    e = (edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-         .filter(F.col("u") != F.col("v"))
-         .distinct())
-    e = e.localCheckpoint(eager=True)
-    n_edges = e.count()
-    small = SMALL_GRAPH_EDGES if small_graph_threshold is None \
-        else small_graph_threshold
-    if n_edges <= small:
-        return _driver_union_find(e)
+    e = (_edges(edges, src, dst).filter(F.col("u") != F.col("v"))
+         .distinct().localCheckpoint(eager=True))
+    n_edges, arrs = small_input(e, small_graph_threshold, "u", "v")
+    if arrs is not None:
+        return _driver_union_find(e, *arrs)
     with _round_width(e.sparkSession, n_edges):
         return _star_rounds(e, n_edges, max_iter, check_every)
 

@@ -1279,55 +1279,6 @@ def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
                        textual.language_id(F.col("text")).alias("lang_pred"))
 
 
-#: Round-9 driver window (kept for the r9 guard test and NOTES lineage):
-#: the final 11 never-driver-verified queries plus 39 re-checks of the
-#: oldest (r01-era) driver greens.  After r9 the never-verified pool is
-#: ZERO and the frozen 357 registry is fully driver-covered.
-_PRIORITY_R9 = [
-    "sequential_obf_events", "shard_rebalance_docs", "skyline_orders",
-    "spearman_daily_events", "t_closeness_events", "tenure_hazard_events",
-    "theil_u_docs", "trend_test_events", "two_proportion_events",
-    "weighted_median_lineitem", "wilson_ci_events",
-    "agg_stats", "concat_diagonal", "concat_vertical", "datetime_funcs",
-    "dedup_exact_groups", "dq_checks", "drop_nulls_q", "embed_near_dup",
-    "embed_topk", "expr_math", "expr_predicates", "head_tail",
-    "is_unique_flag", "join_anti", "join_cross", "join_full", "join_inner",
-    "join_left", "join_right", "join_semi", "lang_id", "ngram_jaccard",
-    "null_handling", "q10_returned_items", "q3_shipping_priority",
-    "q5_local_supplier", "q6_forecast_revenue", "rank_window",
-    "segment_revenue", "selectors_numeric", "sort_slice", "string_funcs",
-    "string_regex", "text_fingerprint", "text_quality", "text_tokens",
-    "unique_rows", "unnest_struct", "when_then",
-]
-
-
-#: Round-10 driver window — exactly the 50-name list pre-staged in
-#: NOTES.md at the end of round 9: the rolling re-verification frontier
-#: advances to the 50 OLDEST r2–r5-era greens (ordered by first-green
-#: round, then name) that were not re-checked in the r9 window.  Every
-#: registry row is already driver-green; this window keeps the oldest
-#: evidence current under the strict dtype-aware harness.
-_PRIORITY_R10 = [
-    "dedup_minhash_pairs", "dedup_simhash_pairs", "diff_lag",
-    "embed_lsh_topk", "embed_topk_numpy", "events_hourly", "grok_extract",
-    "json_extract",
-    "asof_join_events", "bm25_docs", "cast_ops", "connected_components_docs",
-    "connected_components_star_docs", "cube_rollup", "decontaminate_docs",
-    "doc_chunks", "dsir_select_docs", "gopher_rules_docs",
-    "grouping_sets_revenue", "hash_split_docs", "incremental_dedup_docs",
-    "kmeans_clusters_emb", "median_by_group", "mixture_sample_docs",
-    "ntile_customers", "pack_sequences", "pagerank_event_transitions",
-    "percentiles_events", "pii_redact", "pivot_lang_counts",
-    "q11_important_parts", "q13_customer_distribution", "q14_promo_revenue",
-    "q15_top_supplier", "q16_supplier_cnt", "q17_small_quantity",
-    "q18_large_volume", "q19_disjunctive", "q20_excess_shippers",
-    "q21_waiting_suppliers", "q22_idle_customers", "q2_min_cost_supplier",
-    "q4_order_priority", "q7_volume_shipping", "q8_market_share",
-    "q9_product_profit", "range_join_events", "repeated_spans_docs",
-    "semantic_dedup_keep", "session_window_native",
-]
-
-
 #: Round-11 driver window — per the r10 verdict ("stage the r11 driver
 #: correctness window to lead with the 24 r10-optimized queries plus
 #: rotation filler"): the 24 r10-optimized paths (fan_out batch +

@@ -25,6 +25,12 @@ This module also owns the lifetime of persisted intermediates:
 - `invocation`: the caller that owns a run (a pub/sub function run, one
   bench or oracle-check query) opens a scope; on exit every frame reused
   inside it is unpersisted.  Nothing else unpersists.
+
+and the one small-input driver gate:
+
+- `small_input`: an iterative operator asks it whether its input is small
+  enough to run the recursion on numpy arrays in the driver instead of as
+  per-round Spark jobs.
 """
 
 from __future__ import annotations
@@ -32,6 +38,7 @@ from __future__ import annotations
 import contextvars
 from contextlib import contextmanager
 
+import numpy as np
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
@@ -70,6 +77,25 @@ def invocation():
         _scopes.reset(token)
         for df in reversed(frames):
             df.unpersist(blocking=False)
+
+
+def small_input(df: DataFrame, threshold: int, *cols: str):
+    """The small-input driver gate: one `count()`, returned as `n`, and —
+    only when `n <= threshold` — the `cols` as numpy arrays collected in
+    one Arrow job (zero-copy for numeric columns); otherwise `None`.
+
+    Below the threshold an iterative operator's rounds cost scheduled
+    jobs, not data, so it runs the identical recursion on the arrays.
+    Threshold 0 forces the distributed path for any non-empty frame; an
+    empty frame yields empty arrays without a collect.  A failed collect
+    raises: there is no silent fallback to the distributed path."""
+    n = df.count()
+    if n > threshold:
+        return n, None
+    if n == 0:
+        return 0, [np.empty(0, dtype=object) for _ in cols]
+    tbl = df.select(*cols).toArrow()
+    return n, [c.to_numpy(zero_copy_only=False) for c in tbl.columns]
 
 
 def fan_out(df: DataFrame, parallelism: int | None = None) -> DataFrame:

@@ -207,10 +207,10 @@ def test_connected_components_star_string_ids(spark):
     """Star contraction only needs a total order — works on string ids."""
     edges = spark.createDataFrame(
         [("b", "a"), ("c", "b"), ("x", "y")], ["id_a", "id_b"])
-    for thr in (None, 0):
+    for kw in ({}, {"small_graph_threshold": 0}):
         got = {r.node: r.component
                for r in dedup.connected_components_star(
-                   edges, small_graph_threshold=thr).collect()}
+                   edges, **kw).collect()}
         assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 

@@ -457,3 +457,36 @@ def test_invocation_releases_on_error_and_nests(spark, cache_state):
     # only the frame reused outside any scope is still cached
     assert cache_state() == (False, 1)
     outer.unpersist(True)
+
+
+def test_small_input_gate_boundary_and_empty(spark):
+    df = spark.createDataFrame([(i, str(i)) for i in range(5)],
+                               "a long, b string")
+    n, arrs = scale.small_input(df, 5, "a", "b")
+    assert n == 5
+    assert sorted(zip(*(c.tolist() for c in arrs))) == \
+        [(i, str(i)) for i in range(5)]
+    assert scale.small_input(df, 4, "a", "b") == (5, None)
+    n, arrs = scale.small_input(df.limit(0), 10, "a")
+    assert n == 0 and [len(c) for c in arrs] == [0]
+
+
+def test_small_input_gate_job_count(spark):
+    """One count job on either side; the Arrow collect is one more job,
+    only below the threshold."""
+    import uuid
+
+    sc = spark.sparkContext
+    df = spark.range(0, 100, 1, 1)
+
+    def jobs(threshold):
+        group = f"small-input-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "small_input job count")
+        try:
+            scale.small_input(df, threshold, "id")
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs(99) == 1
+    assert jobs(100) == 2

@@ -93,24 +93,6 @@ def test_pagerank_star_and_cycle(spark):
     assert long_run[0] > long_run[1]
 
 
-def test_pagerank_weighted_driver_path_matches_distributed(spark):
-    """The opt-in bounded-graph driver fast path must reproduce the
-    distributed path's round-6 output (integer-valued weights keep the
-    out-degree sums exact; contribution sums agree to well below the
-    rounding grid on bounded transition graphs)."""
-    from tabsdata_spark import graph
-
-    edges = spark.createDataFrame(
-        [("a", "b", 3), ("a", "c", 1), ("b", "c", 2), ("c", "a", 5),
-         ("b", "a", 1), ("c", "b", 4), ("d", "a", 2), ("a", "d", 1)],
-        "src string, dst string, w long")
-    dist = sorted(map(tuple, graph.pagerank(
-        edges, iterations=3, weight="w").collect()))
-    fast = sorted(map(tuple, graph.pagerank(
-        edges, iterations=3, weight="w", driver_threshold=100).collect()))
-    assert fast == dist and fast
-
-
 def test_heavy_hitters_exact_and_guarantee(spark):
     from tabsdata_spark import stats
 
@@ -488,52 +470,89 @@ def test_pagerank_star_center_dominates(spark):
 
 def _nontrivial_graph(spark):
     # multi-component graph with hubs, chains and asymmetric degrees so
-    # every iteration produces distinct quantized contributions
+    # every iteration produces distinct quantized contributions; it embeds
+    # a K4 so a 3-core survives.  Integer weights keep pagerank's
+    # out-weight sums exact.
     edges = [(i, (i * 7) % 23) for i in range(60)] + [(2, 9), (9, 15)]
     edges += [(100, 101), (100, 102), (100, 103),
               (101, 102), (101, 103), (102, 103)]
-    edges = [(a, b) for a, b in edges if a != b]
-    return spark.createDataFrame(edges, "s long, d long")
+    edges = [(a, b, (a + b) % 5 + 1) for a, b in edges if a != b]
+    return spark.createDataFrame(edges, "s long, d long, w long")
 
 
-def test_pagerank_exact_driver_and_distributed_agree(spark):
-    """The numpy driver fast path must be BIT-identical to the
-    distributed decimal-sum path (same quantized integer sums, same
-    IEEE updates) — forced via driver_threshold."""
-    from tabsdata_spark import graph
-
-    df = _nontrivial_graph(spark)
-    fast = sorted(map(tuple, graph.pagerank_exact(
-        df, "s", "d", iters=3).collect()))
-    dist = sorted(map(tuple, graph.pagerank_exact(
-        df, "s", "d", iters=3, driver_threshold=0).collect()))
-    assert fast == dist and fast
-
-
-def test_ppr_exact_driver_and_distributed_agree(spark):
-    from tabsdata_spark import graph
-
-    df = _nontrivial_graph(spark)
+def _harness_input(spark, name):
+    """(edges, seeds) for the driver-vs-distributed agreement harness."""
     seeds = spark.createDataFrame([(2,), (100,), (999,)], "node long")
-    fast = sorted(map(tuple, graph.ppr_exact(
-        df, "s", "d", seeds, "node", iters=2).collect()))
-    dist = sorted(map(tuple, graph.ppr_exact(
-        df, "s", "d", seeds, "node", iters=2,
-        driver_threshold=0).collect()))
-    assert fast == dist and fast
+    if name == "nontrivial":
+        return _nontrivial_graph(spark), seeds
+    if name == "empty":
+        return spark.createDataFrame([], "s long, d long, w long"), seeds
+    if name == "string_ids":
+        return spark.createDataFrame(
+            [("a", "b", 3), ("a", "c", 1), ("b", "c", 2), ("c", "a", 5),
+             ("b", "a", 1), ("c", "b", 4), ("d", "a", 2), ("a", "d", 1)],
+            "s string, d string, w long"), \
+            spark.createDataFrame([("a",), ("zz",)], "node string")
+    # a null endpoint connects nothing, on either path; the K4 on 1-4
+    # keeps a 3-core alive around the null edges
+    return spark.createDataFrame(
+        [(1, 2, 1), (2, 3, 1), (3, None, 1), (4, 1, 1), (1, 3, 2),
+         (2, 4, 1), (3, 4, 3), (None, 2, 1)],
+        "s long, d long, w long"), seeds
 
 
-def test_hits_exact_driver_and_distributed_agree(spark):
+def _gated_ops():
+    """op -> (call(edges, seeds, **threshold), threshold kwarg, the value
+    that turns the driver path on — None: the operator's default)."""
     from tabsdata_spark import graph
+    from tabsdata_spark.llm import dedup
 
-    df = _nontrivial_graph(spark)
-    fast = sorted(map(tuple, graph.hits_exact(
-        df, "s", "d", iters=2).collect()))
-    for sp in (None, 8):  # both distributed modes
-        dist = sorted(map(tuple, graph.hits_exact(
-            df, "s", "d", iters=2, score_partitions=sp,
-            driver_threshold=0).collect()))
-        assert fast == dist and fast
+    return {
+        # pagerank's driver path is opt-in (its default threshold is 0)
+        "pagerank": (lambda e, sd, **t: graph.pagerank(
+            e, iterations=3, src="s", dst="d", weight="w", **t),
+            "driver_threshold", graph.DRIVER_EDGE_THRESHOLD),
+        "pagerank_exact": (lambda e, sd, **t: graph.pagerank_exact(
+            e, "s", "d", iters=3, **t), "driver_threshold", None),
+        "ppr_exact": (lambda e, sd, **t: graph.ppr_exact(
+            e, "s", "d", sd, "node", iters=2, **t),
+            "driver_threshold", None),
+        "hits_exact": (lambda e, sd, **t: graph.hits_exact(
+            e, "s", "d", iters=2, **t), "driver_threshold", None),
+        "hits_exact_partitioned": (lambda e, sd, **t: graph.hits_exact(
+            e, "s", "d", iters=2, score_partitions=8, **t),
+            "driver_threshold", None),
+        "kcore_peel": (lambda e, sd, **t: graph.kcore_peel(
+            e, "s", "d", k=3, rounds=3, **t), "driver_threshold", None),
+        "connected_components": (
+            lambda e, sd, **t: dedup.connected_components(e, "s", "d", **t),
+            "small_graph_threshold", None),
+        "connected_components_star": (
+            lambda e, sd, **t: dedup.connected_components_star(
+                e, "s", "d", **t),
+            "small_graph_threshold", None),
+    }
+
+
+@pytest.mark.parametrize("graph_in",
+                         ["nontrivial", "empty", "string_ids",
+                          "null_endpoint"])
+@pytest.mark.parametrize("op", sorted(_gated_ops()))
+def test_gated_operator_driver_and_distributed_agree(spark, op, graph_in):
+    """Every operator behind the small-input gate gives identical rows on
+    the driver path (its default threshold) and the distributed path
+    (threshold 0): the exact operators bit-for-bit, `pagerank` on its
+    round-6 grid."""
+    call, kwarg, on = _gated_ops()[op]
+    edges, seeds = _harness_input(spark, graph_in)
+    dist = sorted(map(tuple, call(edges, seeds, **{kwarg: 0}).collect()))
+    drv = sorted(map(tuple, call(
+        edges, seeds, **({} if on is None else {kwarg: on})).collect()))
+    assert drv == dist
+    assert all(r[0] is not None for r in dist)
+    # only the empty graph, and the 4-node string graph's 3-core, are empty
+    assert bool(dist) == (graph_in != "empty" and
+                          (op, graph_in) != ("kcore_peel", "string_ids"))
 
 
 def test_kaplan_meier_product_limit(spark):
@@ -1409,23 +1428,6 @@ def test_kcore_peels_cascade(spark):
            for r in graph.kcore_peel(df, "s", "d", k=2,
                                      rounds=3).collect()}
     assert got == {1: 2, 2: 2, 3: 2}
-
-
-def test_kcore_driver_and_distributed_modes_agree(spark):
-    from tabsdata_spark import graph
-
-    edges = [(i, (i * 7) % 23) for i in range(60)] + [(2, 9), (9, 15)]
-    # embed a K4 so a 3-core actually survives
-    edges += [(100, 101), (100, 102), (100, 103),
-              (101, 102), (101, 103), (102, 103)]
-    edges = [(a, b) for a, b in edges if a != b]
-    df = spark.createDataFrame(edges, "s long, d long")
-    small = {(r.node, r.degree) for r in
-             graph.kcore_peel(df, "s", "d", k=3, rounds=3).collect()}
-    big = {(r.node, r.degree) for r in
-           graph.kcore_peel(df, "s", "d", k=3, rounds=3,
-                            driver_threshold=0).collect()}
-    assert small == big and small
 
 
 def test_brier_decomposition_identity_and_perfect(spark):

@@ -61,10 +61,12 @@ def vanilla(spark):
         prev._jvm.SparkSession.setActiveSession(prev._jsparkSession)
 
 
-def test_full_registry_runs_on_vanilla_session(vanilla, sf_dir):
+def test_full_registry_runs_on_vanilla_session(vanilla, sf_dir, cache_state):
     """Sweep the whole queries() registry: each must build and execute.
     (Value-level oracle checks run in tools/check_queries.py --vanilla;
     here we gate on 'no session-dependent crash', the r1 failure mode.)
+    Each query builds and runs inside its own `scale.invocation()`, so
+    the sweep leaves nothing in the session's cache.
 
     The 357 sweeps are independent, so they run from a small thread pool
     (Spark schedules concurrent jobs; pinned-thread mode maps each Python
@@ -75,6 +77,7 @@ def test_full_registry_runs_on_vanilla_session(vanilla, sf_dir):
     from concurrent.futures import ThreadPoolExecutor
 
     from tabsdata_spark.queries import queries
+    from tabsdata_spark.scale import invocation
 
     def _activate():
         vanilla._jvm.SparkSession.setActiveSession(vanilla._jsparkSession)
@@ -82,7 +85,8 @@ def test_full_registry_runs_on_vanilla_session(vanilla, sf_dir):
     def run_one(item):
         name, fn = item
         try:
-            fn(vanilla, sf_dir).count()
+            with invocation():
+                fn(vanilla, sf_dir).count()
             return None
         except Exception as e:  # noqa: BLE001 - collect all, report once
             return f"{name}: {type(e).__name__}: {str(e)[:160]}"
@@ -91,6 +95,7 @@ def test_full_registry_runs_on_vanilla_session(vanilla, sf_dir):
         failures = [f for f in ex.map(run_one, queries().items())
                     if f is not None]
     assert not failures, "vanilla-session failures:\n" + "\n".join(failures)
+    assert cache_state()[0], "a query's persist outlived its invocation"
 
 
 def test_cast_semantics_on_ansi_session(vanilla):
@@ -135,47 +140,6 @@ def _driver_greens(rounds):
     return out
 
 
-def test_driver_window_covers_never_verified_queries():
-    """Guard the r9 rotation lineage: _PRIORITY_R9 must remain the 11
-    never-driver-verified queries (through r8) plus 39 r1-era greens;
-    CORRECTNESS_r09 must show all 50 green (the window that closed the
-    never-verified pool)."""
-    from tabsdata_spark import queries as registry
-
-    window = registry._PRIORITY_R9
-    assert len(window) == 50
-    all_green_r8 = _driver_greens(("01", "02", "03", "04", "05", "06",
-                                   "07", "08"))
-    never = set(window[:11])
-    rechecks = set(window[11:])
-    assert never & all_green_r8 == set(), never & all_green_r8
-    assert rechecks <= _driver_greens(("01",))
-    # r9 verified the whole window green
-    assert set(window) <= _driver_greens(("09",))
-
-
-def test_driver_window_r10_is_oldest_unrechecked_greens():
-    """Guard the r10 rotation lineage: _PRIORITY_R10 must remain the 50
-    oldest r2–r5-era greens (by first-green round, then name) not
-    re-checked in the r9 window; CORRECTNESS_r10 shows all 50 green."""
-    from tabsdata_spark import queries as registry
-
-    window = registry._PRIORITY_R10
-    assert len(window) == 50
-
-    # every window name first went green in rounds 2-5 and was NOT part
-    # of the r9 window (i.e. not already re-checked under the strict
-    # harness)
-    r1 = _driver_greens(("01",))
-    r2_5 = _driver_greens(("02", "03", "04", "05"))
-    for n in window:
-        assert n in r2_5 and n not in r1, n
-        assert n not in registry._PRIORITY_R9, n
-
-    # r10 verified the whole window green
-    assert set(window) <= _driver_greens(("10",))
-
-
 def test_driver_window_r11_leads_with_optimized_queries():
     """The driver snapshots queries()[0:50].  Guard the r11 rotation
     (r10 verdict item 4): the window must lead with the r10/r11-optimized
@@ -202,7 +166,7 @@ def test_driver_window_r11_leads_with_optimized_queries():
     # evidence; overlap is allowed only in the optimized lead section,
     # where re-confirmation is the point (e.g. pagerank_event_transitions
     # was r10-verified AND r11-touched)
-    assert set(window[26:]) & set(registry._PRIORITY_R10) == set()
+    assert set(window[26:]) & _driver_greens(("10",)) == set()
 
     # cumulative coverage: every registry query is green in some prior
     # round (the never-verified pool stays zero)

@@ -147,6 +147,7 @@ def main() -> None:
 
     import tabsdata_spark as td
     from tabsdata_spark.queries import queries
+    from tabsdata_spark.scale import invocation
 
     spark = td.get_spark()
     spark.sparkContext.setLogLevel("ERROR")
@@ -154,7 +155,9 @@ def main() -> None:
     unexplained = {}
     for name, fn in queries().items():
         try:
-            plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+            with invocation():
+                plan = (fn(spark, sf_dir)._jdf.queryExecution()
+                        .executedPlan().toString())
         except Exception as e:  # noqa: BLE001
             unexplained[name] = [f"PLAN-ERROR {type(e).__name__}"]
             continue
